@@ -227,9 +227,7 @@ def merge_batch_into_state(batch_df: DataFrame, batch_id: int,
     from .concepts import _canonical_intents, intent_state, merge_intent_state
 
     spark = batch_df.sparkSession
-    prev_versions = [
-        v for v in _committed_state_versions(state_dir) if v < batch_id
-    ]
+    prev_versions = [v for v in state_versions(state_dir) if v < batch_id]
     prev = (
         spark.read.parquet(
             os.path.join(state_dir, "state", f"v{prev_versions[-1]}")
@@ -250,39 +248,21 @@ def merge_batch_into_state(batch_df: DataFrame, batch_id: int,
     os.replace(tmp, os.path.join(state_dir, "CURRENT"))
 
 
-def _committed_state_versions(state_dir: str) -> list[int]:
-    """Sorted batch ids whose state/v{id} snapshot finished writing
-    (parquet _SUCCESS marker) — the replay-safe source of truth."""
+def _committed_batches(state_dir: str, sub: str, prefix: str) -> list[int]:
+    """Sorted batch ids whose ``{sub}/{prefix}{id}`` dir finished writing
+    (parquet _SUCCESS marker) — the replay-safe source of truth for both
+    the ``state/v{id}`` snapshots and the ``inst/b{id}`` instance maps."""
     import os
 
-    sdir = os.path.join(state_dir, "state")
-    if not os.path.isdir(sdir):
-        return []
-    out = []
-    for name in os.listdir(sdir):
-        if (
-            name.startswith("v")
-            and name[1:].isdigit()
-            and os.path.exists(os.path.join(sdir, name, "_SUCCESS"))
-        ):
-            out.append(int(name[1:]))
-    return sorted(out)
-
-
-def _committed_inst_batches(state_dir: str) -> list[int]:
-    """Sorted batch ids whose inst/b{id} instance dir finished writing
-    (parquet _SUCCESS marker) — mirror of :func:`_committed_state_versions`."""
-    import os
-
-    idir = os.path.join(state_dir, "inst")
-    if not os.path.isdir(idir):
+    d = os.path.join(state_dir, sub)
+    if not os.path.isdir(d):
         return []
     return sorted(
-        int(name[1:])
-        for name in os.listdir(idir)
-        if name.startswith("b")
-        and name[1:].isdigit()
-        and os.path.exists(os.path.join(idir, name, "_SUCCESS"))
+        int(name[len(prefix):])
+        for name in os.listdir(d)
+        if name.startswith(prefix)
+        and name[len(prefix):].isdigit()
+        and os.path.exists(os.path.join(d, name, "_SUCCESS"))
     )
 
 
@@ -327,7 +307,7 @@ def hierarchy_from_state_dir(spark: SparkSession, state_dir: str,
     cur = current_version(state_dir)
     paths = [
         os.path.join(state_dir, "inst", f"b{b}")
-        for b in _committed_inst_batches(state_dir)
+        for b in _committed_batches(state_dir, "inst", "b")
         if b <= cur
     ]
     inst = spark.read.parquet(*paths)
@@ -339,7 +319,7 @@ def hierarchy_from_state_dir(spark: SparkSession, state_dir: str,
 
 def state_versions(state_dir: str) -> list[int]:
     """Committed snapshot versions, oldest first — the time-travel axis."""
-    return _committed_state_versions(state_dir)
+    return _committed_batches(state_dir, "state", "v")
 
 
 def prune_state(state_dir: str, keep_last: int = 5) -> list[int]:
@@ -356,7 +336,7 @@ def prune_state(state_dir: str, keep_last: int = 5) -> list[int]:
     import os
     import shutil
 
-    versions = _committed_state_versions(state_dir)
+    versions = state_versions(state_dir)
     removed = []
     for v in versions[:-keep_last] if keep_last > 0 else versions[:-1]:
         shutil.rmtree(os.path.join(state_dir, "state", f"v{v}"))
@@ -380,8 +360,7 @@ def hierarchy_at(spark: SparkSession, state_dir: str, batch_id: int,
 
     from .concepts import _hierarchy_from_state
 
-    versions = [v for v in _committed_state_versions(state_dir)
-                if v <= batch_id]
+    versions = [v for v in state_versions(state_dir) if v <= batch_id]
     if not versions:
         raise ValueError(
             f"no committed state at or below batch {batch_id} "
@@ -389,7 +368,8 @@ def hierarchy_at(spark: SparkSession, state_dir: str, batch_id: int,
         )
     snap = versions[-1]
     idir = os.path.join(state_dir, "inst")
-    wanted = [b for b in _committed_inst_batches(state_dir) if b <= batch_id]
+    wanted = [b for b in _committed_batches(state_dir, "inst", "b")
+              if b <= batch_id]
     # the snapshot must cover every instance batch in the window — a
     # pruned intermediate snapshot silently falling back to older state
     # would drop those batches' intents

@@ -1,14 +1,14 @@
 """Checkpointed stage runner — the resume spine (north rule).
 
 Each pipeline stage materializes to Parquet (Iceberg at cluster scale — the
-writer is format-agnostic) together with:
-  * per-partition lineage counters (stage, partition_id, rows), and
-  * a stage metrics row (rows, partitions, wall seconds).
-
-A re-run finds the committed snapshot (_SUCCESS) and skips the stage, so a
-mid-pipeline kill resumes from the latest complete stage with byte-identical
-final output (tests/test_pipeline.py::test_resume_after_partial_failure
-proves it).
+writer is format-agnostic) and then commits ONE record, ``_commit.json``:
+format, schema, bucket spec (or none), per-file footer row counts and the
+stage metrics (rows, partitions, wall seconds). The record is written last,
+to a temp file that ``os.replace`` moves into place, so it is the only
+completion marker: a stage dir without it is rebuilt; a stage dir with it is
+never rebuilt, and opens from the record alone — never from the caller's
+current arguments. A kill at any point of a stage therefore resumes to
+identical output (tests/test_checkpoint.py walks every kill point).
 
 Stages may checkpoint BUCKETED (``bucket_key=``): the snapshot is written
 ``bucketBy(N, key) + sortBy(key)`` as an EXTERNAL table whose location is
@@ -17,8 +17,8 @@ is exchange-free by layout — the shuffle is paid once at checkpoint time,
 not per consumer (the 100 TB story for the kg_* joins and the pagerank
 loop over a checkpointed edge table). Resume is catalog-independent: the
 files outlive the session's in-memory catalog, and a fresh session
-re-registers the bucket spec with CREATE TABLE ... CLUSTERED BY ...
-LOCATION before reading, so the layout survives restarts too.
+re-registers the RECORDED bucket spec with CREATE TABLE ... CLUSTERED BY
+... LOCATION before reading, so the layout survives restarts too.
 """
 
 from __future__ import annotations
@@ -31,6 +31,16 @@ import time
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+COMMIT = "_commit.json"
+
+
+def _table_prefix(base_dir: str) -> str:
+    """Catalog-name prefix of a workdir's bucketed stages — unique per
+    workdir so two concurrent runs never collide on a table name."""
+    tag = hashlib.md5(os.path.abspath(base_dir).encode()).hexdigest()[:10]
+    return f"chf_ck_{tag}_"
 
 
 class StageRunner:
@@ -45,7 +55,7 @@ class StageRunner:
         return os.path.join(self.base_dir, name)
 
     def is_complete(self, name: str) -> bool:
-        return os.path.exists(os.path.join(self._path(name), "_SUCCESS"))
+        return os.path.exists(os.path.join(self._path(name), COMMIT))
 
     @staticmethod
     def _footer_lineage(path: str) -> list[tuple[str, int]]:
@@ -68,51 +78,29 @@ class StageRunner:
         return out
 
     def _table_name(self, name: str) -> str:
-        """Catalog name for a bucketed stage — unique per workdir so two
-        concurrent runs never collide on a table name."""
-        tag = hashlib.md5(os.path.abspath(self.base_dir).encode()).hexdigest()[:10]
-        return f"chf_ck_{tag}_{name}".lower()
+        return _table_prefix(self.base_dir) + name.lower()
 
-    def _committed_layout(self, path: str) -> dict | None:
-        """The layout RECORDED at write time (stage ``_metrics.json``), or
-        None if the metrics file is missing (killed in the narrow window
-        between the snapshot's _SUCCESS and the metrics write)."""
-        try:
-            with open(os.path.join(path, "_metrics.json")) as f:
-                return json.load(f)
-        except (OSError, ValueError):
-            return None
+    def _open(self, name: str, rec: dict) -> DataFrame:
+        """The committed snapshot, laid out exactly as ``rec`` records it.
 
-    def _read_bucketed(self, name: str, path: str, bucket_key: str,
-                       n_buckets: int) -> DataFrame:
-        """Read a committed bucketed snapshot, re-registering the bucket
-        spec if this session's catalog has never seen it (resume after
-        restart — the files carry no bucket metadata, the catalog does).
-
-        The spec registered is the one RECORDED at write time, never the
-        caller's current arguments: a resume with a different
-        ``n_buckets`` (or over a flat-era snapshot) must not declare a
-        layout the committed files don't have — Spark would trust the
-        catalog, elide exchanges, and silently mis-join (wrong-spec case)
-        or crash on flat part-file names (flat case)."""
-        rec = self._committed_layout(path)
-        if rec is not None:
-            if rec.get("bucketed_by") is None:
-                # committed FLAT (bucketed=False era): read it flat even
-                # though the caller now asks for the bucketed layout
-                return self.spark.read.format(self.fmt).load(path)
-            bucket_key = rec["bucketed_by"]
-            n_buckets = rec["n_buckets"]
+        The recorded schema skips Spark's schema-inference job. A bucketed
+        record re-registers its spec if this session's catalog has never
+        seen it (resume after restart — the files carry no bucket metadata,
+        the catalog does)."""
+        path = self._path(name)
+        schema = StructType.fromJson(json.loads(rec["schema"]))
+        key = rec["bucket_key"]
+        if key is None:
+            return self.spark.read.schema(schema).format(rec["format"]).load(path)
         tbl = self._table_name(name)
         if not self.spark.catalog.tableExists(tbl):
-            schema = self.spark.read.format(self.fmt).load(path).schema
             cols = ", ".join(
                 f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
             )
             self.spark.sql(
-                f"CREATE TABLE {tbl} ({cols}) USING {self.fmt} "
-                f"CLUSTERED BY (`{bucket_key}`) SORTED BY (`{bucket_key}`) "
-                f"INTO {n_buckets} BUCKETS LOCATION '{path}'"
+                f"CREATE TABLE {tbl} ({cols}) USING {rec['format']} "
+                f"CLUSTERED BY (`{key}`) SORTED BY (`{key}`) "
+                f"INTO {rec['n_buckets']} BUCKETS LOCATION '{path}'"
             )
         return self.spark.table(tbl)
 
@@ -121,14 +109,13 @@ class StageRunner:
         """Run (or resume) one stage; returns the materialized DataFrame.
 
         ``bucket_key`` switches the snapshot to the bucketed layout:
-        downstream joins/groupBys on that key read it exchange-free."""
+        downstream joins/groupBys on that key read it exchange-free. It
+        applies to a build only — a committed stage keeps its layout."""
         path = self._path(name)
         t0 = time.time()
         if self.is_complete(name):
-            if bucket_key is not None:
-                df = self._read_bucketed(name, path, bucket_key, n_buckets)
-            else:
-                df = self.spark.read.format(self.fmt).load(path)
+            with open(os.path.join(path, COMMIT)) as f:
+                df = self._open(name, json.load(f))
             self.metrics.append(
                 {"stage": name, "resumed": True, "seconds": round(time.time() - t0, 3)}
             )
@@ -137,7 +124,7 @@ class StageRunner:
         if bucket_key is not None:
             tbl = self._table_name(name)
             # external table: DROP forgets the spec but keeps files; the
-            # incomplete dir is ours to clear (same overwrite semantics
+            # uncommitted dir is ours to clear (same overwrite semantics
             # as the flat path)
             self.spark.sql(f"DROP TABLE IF EXISTS {tbl}")
             shutil.rmtree(path, ignore_errors=True)
@@ -152,33 +139,31 @@ class StageRunner:
                 .option("path", path)
                 .saveAsTable(tbl)
             )
-            out = self.spark.table(tbl)
         else:
             df.write.mode("overwrite").format(self.fmt).save(path)
-            out = self.spark.read.format(self.fmt).load(path)
-        # per-partition lineage counters from the parquet footers — pure
+        # per-partition lineage counters from the columnar footers — pure
         # metadata reads on the driver, zero extra Spark jobs per stage
-        # (works the same against HDFS/S3 via pyarrow filesystems; an
-        # Iceberg snapshot exposes the identical counts in its manifest)
         lineage = self._footer_lineage(path)
-        with open(os.path.join(path, "_lineage.json"), "w") as f:
-            json.dump({"stage": name, "files": lineage}, f)
-        rows = sum(r for _, r in lineage)
-        n_parts = len(lineage)
         rec = {
-            "stage": name,
-            "resumed": False,
-            "rows": rows,
-            "partitions": n_parts,
+            "format": self.fmt,
+            "schema": df.schema.json(),
+            "bucket_key": bucket_key,
+            "n_buckets": n_buckets if bucket_key is not None else None,
+            "files": lineage,
+            "rows": sum(r for _, r in lineage),
+            "partitions": len(lineage),
             "seconds": round(time.time() - t0, 3),
         }
-        if bucket_key is not None:
-            rec["bucketed_by"] = bucket_key
-            rec["n_buckets"] = n_buckets
-        self.metrics.append(rec)
-        with open(os.path.join(path, "_metrics.json"), "w") as f:
+        tmp = os.path.join(path, COMMIT + ".tmp")
+        with open(tmp, "w") as f:
             json.dump(rec, f)
-        return out
+        os.replace(tmp, os.path.join(path, COMMIT))
+        row = {"stage": name, "resumed": False, "rows": rec["rows"],
+               "partitions": rec["partitions"], "seconds": rec["seconds"]}
+        if bucket_key is not None:
+            row.update(bucketed_by=bucket_key, n_buckets=n_buckets)
+        self.metrics.append(row)
+        return self._open(name, rec)
 
     def write_run_metrics(self) -> str:
         p = os.path.join(self.base_dir, "run_metrics.json")
@@ -193,8 +178,7 @@ def drop_checkpoint_tables(spark: SparkSession, base_dir: str) -> int:
     deleting a workdir inside a live session; otherwise the entries dangle
     at a removed location and any later catalog enumeration that reads
     them fails. Returns the number of tables dropped."""
-    tag = hashlib.md5(os.path.abspath(base_dir).encode()).hexdigest()[:10]
-    prefix = f"chf_ck_{tag}_"
+    prefix = _table_prefix(base_dir)
     n = 0
     for t in spark.catalog.listTables():
         if t.name.startswith(prefix) and not t.isTemporary:

@@ -55,7 +55,6 @@ def run_pipeline(
     open_vocab: bool = False,
     mention_entities: int | None = None,
     fmt: str = "parquet",
-    bucketed: bool = True,
     n_buckets: int = 16,
 ) -> dict:
     """Run (or resume) the full pipeline; returns stage DataFrames.
@@ -67,18 +66,18 @@ def run_pipeline(
     tiny stage outputs get packed into one partition. Defaults to
     2× defaultParallelism.
 
-    ``bucketed=True`` (the default) checkpoints the graph-shaped stages
-    in the bucketed layout (edges by src; nodes/features/intents by id;
+    The graph-shaped stages checkpoint in the bucketed layout
+    (``n_buckets`` buckets; edges by src; nodes/features/intents by id;
     assignments by instance_id), so every downstream kg_* join or
     pagerank iteration over a checkpoint is exchange-free by layout —
     the per-stage write shuffle is paid once, every consumer skips its
     exchange. Measured A/B at fixture scale (2000 pages, local[8], warm):
     flat 8.37 s vs bucketed 8.35 s — the write-side cost is noise here,
-    and at 100 TB the avoided per-consumer exchanges dominate, so the
-    layout is on by default; ``bucketed=False`` keeps the flat snapshots.
+    and at 100 TB the avoided per-consumer exchanges dominate. A resumed
+    stage keeps the layout its commit record holds, whatever
+    ``n_buckets`` the resuming call passes.
     """
     runner = StageRunner(spark, workdir, fmt=fmt)
-    bk = (lambda key: key) if bucketed else (lambda key: None)
     par = parallelism or spark.sparkContext.defaultParallelism * 2
 
     def _spread(df: DataFrame) -> DataFrame:
@@ -136,21 +135,21 @@ def run_pipeline(
     # S4 — property-graph materialization + features
     nodes, edges = graph_from_triples(s3)
     s4_nodes = runner.stage(
-        "s4_nodes", lambda: nodes, bucket_key=bk("id"), n_buckets=n_buckets
+        "s4_nodes", lambda: nodes, bucket_key="id", n_buckets=n_buckets
     )
     s4_edges = runner.stage(
-        "s4_edges", lambda: edges, bucket_key=bk("src"), n_buckets=n_buckets
+        "s4_edges", lambda: edges, bucket_key="src", n_buckets=n_buckets
     )
 
     s5_struct = runner.stage(
         "s5_struct_features",
         lambda: structural_features(s4_nodes, s4_edges),
-        bucket_key=bk("id"), n_buckets=n_buckets,
+        bucket_key="id", n_buckets=n_buckets,
     )
     s5_intents = runner.stage(
         "s5_char_sets",
         lambda: characteristic_sets(s4_nodes, s4_edges),
-        bucket_key=bk("id"), n_buckets=n_buckets,
+        bucket_key="id", n_buckets=n_buckets,
     )
 
     # S6 — concept hierarchy over characteristic-set intents (F3 is the
@@ -178,7 +177,7 @@ def run_pipeline(
     )
     s6_assign = runner.stage(
         "s6_assignments", lambda: _hierarchy()["assignments"],
-        bucket_key=bk("instance_id"), n_buckets=n_buckets,
+        bucket_key="instance_id", n_buckets=n_buckets,
     )
 
     runner.write_run_metrics()

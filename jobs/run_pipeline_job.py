@@ -26,12 +26,6 @@ def main() -> None:
     ap.add_argument("--lang", default="en")
     ap.add_argument("--iceberg", action="store_true",
                     help="treat --pages as an Iceberg table name")
-    ap.add_argument("--flat", action="store_true",
-                    help="disable the bucketed checkpoint layout (default: "
-                         "graph stages checkpoint bucketBy node id — edges "
-                         "by src, features/intents by id — so downstream "
-                         "kg_* joins and the pagerank loop read them "
-                         "exchange-free)")
     ap.add_argument("--n-buckets", type=int, default=16)
     args = ap.parse_args()
 
@@ -54,7 +48,7 @@ def main() -> None:
     )
     out = run_pipeline(spark, pages, args.workdir,
                        n_entities=args.n_entities, lang=args.lang,
-                       bucketed=not args.flat, n_buckets=args.n_buckets)
+                       n_buckets=args.n_buckets)
     n_triples = out["triples"].count()
     n_concepts = out["concepts"].count()
     print(json.dumps({

@@ -8,6 +8,7 @@ fixture); determinism uses a smaller corpus at two partition counts.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import tempfile
@@ -71,8 +72,10 @@ def test_resume_after_partial_failure_identical_output(spark, pipeline_run):
     assert "s6_concepts" not in resumed  # was wiped -> recomputed
     final2 = sorted(map(tuple, out2["concepts"].drop("intent").collect()))
     assert final1 == final2
-    # per-partition lineage exists for recomputed stages
-    assert os.path.exists(wd + "/s6_concepts/_lineage.json")
+    # per-partition lineage is committed for recomputed stages
+    with open(wd + "/s6_concepts/_commit.json") as f:
+        files = json.load(f)["files"]
+    assert files and sum(n for _, n in files) == len(final2)
 
 
 def test_pipeline_deterministic_across_partition_counts(spark):
@@ -138,16 +141,11 @@ def test_pipeline_orc_format_end_to_end_with_resume(spark):
         assert got, "orc pipeline produced no triples"
         # lineage counters came from ORC footers, not parquet
         import glob
-        import json
 
-        lineage_files = glob.glob(os.path.join(wd, "*", "_lineage.json"))
-        assert lineage_files
-        rows = sum(
-            n
-            for lf in lineage_files
-            for _, n in json.load(open(lf))["files"]
-        )
-        assert rows > 0
+        records = [json.load(open(c))
+                   for c in glob.glob(os.path.join(wd, "*", "_commit.json"))]
+        assert records and all(r["format"] == "orc" for r in records)
+        assert sum(n for r in records for _, n in r["files"]) > 0
         assert glob.glob(os.path.join(wd, "s3_triples", "part-*.orc"))
 
         wdp = tempfile.mkdtemp(prefix="chf_par_")
@@ -188,18 +186,14 @@ def _assert_no_hash_exchange(spark, df):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
-def test_bucketed_checkpoints_zero_exchange_and_flat_equivalence(
-        spark, pipeline_run):
-    """r4 carry-over task 5: the default pipeline checkpoints the graph
-    stages bucketBy(node id). (a) A downstream join of two checkpoints
-    on the bucket key plans with ZERO hash exchanges; (b) the flat
-    layout produces identical output (layout never changes semantics).
+def test_bucketed_checkpoints_zero_exchange(spark, pipeline_run):
+    """r4 carry-over task 5: the pipeline checkpoints the graph stages
+    bucketBy(node id), and a downstream join of two checkpoints on the
+    bucket key plans with ZERO hash exchanges.
 
     Earlier tests may rewrite fixture stage dirs (resume test), which
     stales the fixture's DataFrame handles — so this test re-resumes the
     fixture workdir for fresh handles instead of reusing them."""
-    import json as _json
-
     wd, _ = pipeline_run
     pages = pages_spark_df(spark, N_PAGES, n_entities=N_ENT)
     out = run_pipeline(spark, pages, wd, n_entities=N_ENT)  # all resumed
@@ -210,25 +204,13 @@ def test_bucketed_checkpoints_zero_exchange_and_flat_equivalence(
         "s6_assignments": "instance_id",
     }
     for stage, key in expected.items():
-        with open(os.path.join(wd, stage, "_metrics.json")) as f:
-            rec = _json.load(f)
-        assert rec.get("bucketed_by") == key, (stage, rec)
-    # (a) features ⋈ intents on id — both bucketed by id — no exchange
+        with open(os.path.join(wd, stage, "_commit.json")) as f:
+            rec = json.load(f)
+        assert rec["bucket_key"] == key, (stage, rec)
+    # features ⋈ intents on id — both bucketed by id — no exchange
     j = out["struct_features"].join(out["intents"], "id")
     _assert_no_hash_exchange(spark, j)
     assert j.count() == out["intents"].count()
-    # (b) flat run in its own workdir: identical stage outputs
-    wd2 = tempfile.mkdtemp(prefix="chf_flat_")
-    try:
-        flat = run_pipeline(spark, pages, wd2, n_entities=N_ENT,
-                            bucketed=False)
-        assert not [m for m in flat["metrics"] if "bucketed_by" in m]
-        for k in ("triples", "concepts", "assignments"):
-            got = sorted(map(tuple, flat[k].collect()))
-            exp = sorted(map(tuple, out[k].collect()))
-            assert got == exp, f"{k} differs between layouts"
-    finally:
-        shutil.rmtree(wd2, ignore_errors=True)
 
 
 def test_bucketed_resume_survives_catalog_loss(spark, pipeline_run):
@@ -249,48 +231,6 @@ def test_bucketed_resume_survives_catalog_loss(spark, pipeline_run):
     # sanity: the re-registered table reads the committed snapshot
     n_disk = spark.read.parquet(os.path.join(wd, "s5_char_sets")).count()
     assert out2["intents"].count() == n_disk > 0
-
-
-def test_resume_uses_recorded_layout_not_caller_args(spark, pipeline_run):
-    """The bucket spec registered on resume is the one RECORDED at write
-    time: resuming with a different n_buckets must not declare a layout
-    the committed files don't have (Spark would trust the catalog, elide
-    exchanges, and silently mis-join), and resuming a FLAT-era workdir
-    under the bucketed default must read it flat, not crash on part-file
-    names that carry no bucket id."""
-    import json as _json
-
-    wd, _ = pipeline_run  # written with the default n_buckets=16
-    for t in spark.catalog.listTables():  # fresh-session catalog
-        if t.name.startswith("chf_ck_"):
-            spark.sql(f"DROP TABLE {t.name}")
-    pages = pages_spark_df(spark, N_PAGES, n_entities=N_ENT)
-    out = run_pipeline(spark, pages, wd, n_entities=N_ENT, n_buckets=4)
-    assert all(m.get("resumed") for m in out["metrics"])
-    with open(os.path.join(wd, "s4_edges", "_metrics.json")) as f:
-        recorded = _json.load(f)["n_buckets"]
-    edges_tbl = next(
-        t.name for t in spark.catalog.listTables()
-        if t.name.startswith("chf_ck_") and t.name.endswith("_s4_edges")
-    )
-    ddl = spark.sql(f"SHOW CREATE TABLE {edges_tbl}").collect()[0][0]
-    assert f"INTO {recorded} BUCKETS" in ddl, ddl  # recorded wins, not 4
-    # joins on the recorded layout stay exchange-free and correct
-    j = out["struct_features"].join(out["intents"], "id")
-    _assert_no_hash_exchange(spark, j)
-    assert j.count() == out["intents"].count()
-
-    # flat-era workdir resumed under the bucketed default: reads flat
-    wd2 = tempfile.mkdtemp(prefix="chf_flatresume_")
-    try:
-        flat = run_pipeline(spark, pages, wd2, n_entities=N_ENT,
-                            bucketed=False)
-        n_exp = flat["assignments"].count()
-        out2 = run_pipeline(spark, pages, wd2, n_entities=N_ENT)  # bucketed
-        assert all(m.get("resumed") for m in out2["metrics"])
-        assert out2["assignments"].count() == n_exp > 0
-    finally:
-        shutil.rmtree(wd2, ignore_errors=True)
 
 
 def test_drop_checkpoint_tables_scoped_to_workdir(spark, pipeline_run):
